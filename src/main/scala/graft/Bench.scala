@@ -271,16 +271,9 @@ object Bench {
     // Deregister so a second run() in the same JVM (or stray concurrent
     // Spark work) can't inflate a later invocation's deltas (ADVICE r16).
     spark.sparkContext.removeSparkListener(jobListener)
-    def jsonStr(s: String): String =
-      "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     val qs = results.map {
       case (k, Right(v))  => "\"" + k + "\":" + v
-      case (k, Left(err)) => "\"" + k + "\":{\"err\":" + jsonStr(err) + "}"
+      case (k, Left(err)) => "\"" + k + "\":{\"err\":" + JsonString.quote(err) + "}"
     }.mkString("{", ",", "}")
     // failed queries are EXCLUDED from the total; errors field names them
     // so the headline number is never silently corrupted

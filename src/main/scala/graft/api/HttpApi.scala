@@ -10,7 +10,7 @@ import scala.util.matching.Regex
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 
-import graft.Health
+import graft.{Health, JsonString}
 import graft.ingest.UploadValidation
 import graft.ingest.UploadValidation.{Upload, ValidationError}
 import graft.jobs.JobService
@@ -127,64 +127,89 @@ object HttpApi {
 
   // ----------------------------------------------------------------- JSON
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
+  private def field(sb: java.lang.StringBuilder, name: String, value: String): java.lang.StringBuilder =
+    JsonString.appendQuoted(sb.append('"').append(name).append("\":"), value)
+
+  private def appendArray[A](sb: java.lang.StringBuilder, xs: Seq[A])(
+      each: A => Any): java.lang.StringBuilder = {
+    sb.append('[')
+    xs.iterator.zipWithIndex.foreach { case (x, k) =>
+      if (k > 0) sb.append(',')
+      each(x)
+    }
+    sb.append(']')
   }
 
-  private def jStr(s: String): String = "\"" + esc(s) + "\""
+  private def appendConversionResult(sb: java.lang.StringBuilder,
+                                     r: ConversionResult): java.lang.StringBuilder = {
+    field(sb.append('{'), "filename", r.filename)
+    if (r.error == null) {
+      field(sb.append(','), "markdown", if (r.markdown == null) "" else r.markdown)
+      appendArray(sb.append(",\"images\":"), r.images) { i =>
+        field(sb.append('{'), "type", i.`type`)
+        field(sb.append(','), "filename", i.filename)
+        field(sb.append(','), "image", i.image).append('}')
+      }
+    } else field(sb.append(','), "error", r.error)
+    sb.append('}')
+  }
 
   /** ConversionResult with exclude_unset semantics: success rows carry
     * filename/markdown/images, failure rows filename/error
     * (service.py:150-158 constructs exactly those field sets). */
-  def conversionResultJson(r: ConversionResult): String = {
-    val fields = Seq.newBuilder[String]
-    fields += s""""filename":${jStr(r.filename)}"""
-    if (r.error == null) {
-      fields += s""""markdown":${jStr(if (r.markdown == null) "" else r.markdown)}"""
-      val imgs = r.images.map(i =>
-        s"""{"type":${jStr(i.`type`)},"filename":${jStr(i.filename)},"image":${jStr(i.image)}}""")
-      fields += s""""images":[${imgs.mkString(",")}]"""
-    } else {
-      fields += s""""error":${jStr(r.error)}"""
-    }
-    fields.result().mkString("{", ",", "}")
+  def conversionResultJson(r: ConversionResult): String =
+    appendConversionResult(new java.lang.StringBuilder, r).toString
+
+  private def appendJobResult(sb: java.lang.StringBuilder,
+                              r: JobService.JobResult): java.lang.StringBuilder = {
+    field(sb.append('{'), "job_id", r.jobId)
+    r.result.foreach(cr => appendConversionResult(sb.append(",\"result\":"), cr))
+    r.error.foreach(e => field(sb.append(','), "error", e))
+    field(sb.append(','), "status", r.status).append('}')
   }
 
-  def jobResultJson(r: JobService.JobResult): String = {
-    val fields = Seq.newBuilder[String]
-    fields += s""""job_id":${jStr(r.jobId)}"""
-    r.result.foreach(cr => fields += s""""result":${conversionResultJson(cr)}""")
-    r.error.foreach(e => fields += s""""error":${jStr(e)}""")
-    fields += s""""status":${jStr(r.status)}"""
-    fields.result().mkString("{", ",", "}")
-  }
+  def jobResultJson(r: JobService.JobResult): String =
+    appendJobResult(new java.lang.StringBuilder, r).toString
 
   def batchJobResultJson(r: JobService.BatchJobResult): String = {
-    val fields = Seq.newBuilder[String]
-    fields += s""""job_id":${jStr(r.jobId)}"""
-    fields += s""""conversion_results":[${r.conversionResults.map(jobResultJson).mkString(",")}]"""
-    fields += s""""status":${jStr(r.status)}"""
-    r.error.foreach(e => fields += s""""error":${jStr(e)}""")
-    fields.result().mkString("{", ",", "}")
+    val sb = new java.lang.StringBuilder
+    field(sb.append('{'), "job_id", r.jobId)
+    appendArray(sb.append(",\"conversion_results\":"), r.conversionResults)(
+      appendJobResult(sb, _))
+    field(sb.append(','), "status", r.status)
+    r.error.foreach(e => field(sb.append(','), "error", e))
+    sb.append('}').toString
   }
 
   // --------------------------------------------------------------- server
 
+  /** Most unread request bytes a response drops before it is sent; a
+    * longer upload is cut off by a reset, as before. */
+  private val DiscardMaxBytes = 64L << 20
+
+  private def createHttpServer(port: Int): HttpServer = {
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+    HttpServer.create(new InetSocketAddress(port), 0)
+  }
+
   /** A running API server bound to `port` (0 = ephemeral; read the actual
-    * one from `boundPort`). `ledgerRoot` hosts the async jobs ledger. */
+    * one from `boundPort`). `ledgerRoot` hosts the async jobs ledger.
+    *
+    * Accepted sockets run with TCP_NODELAY. The JDK server writes the
+    * response headers and the body as two separate flushes; with Nagle's
+    * algorithm on, the body waits for the client's delayed ACK of the
+    * headers (about 40 ms on Linux), which stalls every response no
+    * matter how little work it took. The JDK reads the switch only once,
+    * when its server configuration class initialises at the first
+    * `HttpServer.create` in the JVM, so `createHttpServer` sets it
+    * right before that call. */
   final class Server(spark: SparkSession, port: Int, ledgerRoot: String,
                      corsOrigins: String = "*",
                      maxFileMb: Int = UploadValidation.DefaultMaxFileMb,
                      maxBatchMb: Int = UploadValidation.DefaultMaxBatchMb) {
 
     private val ledger = new JobService.Ledger(ledgerRoot)
-    private val http = HttpServer.create(new InetSocketAddress(port), 0)
+    private val http = createHttpServer(port)
     private val pool = Executors.newFixedThreadPool(8)
     private val workers = Executors.newSingleThreadExecutor()
 
@@ -236,6 +261,7 @@ object HttpApi {
     // ---- plumbing ----
 
     private def respond(ex: HttpExchange, status: Int, json: String): Unit = {
+      discardUnread(ex)
       val bytes = json.getBytes(StandardCharsets.UTF_8)
       corsHeaders(ex)
       ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -245,8 +271,26 @@ object HttpApi {
       os.close()
     }
 
+    /** Read and drop request bytes the handler left unread (a refused
+      * upload, a 422 before the body), up to `DiscardMaxBytes`, before the
+      * response goes out. The JDK server closes a connection whose request
+      * body is not at its end once the response is written, and closing a
+      * socket with unread input makes the kernel send a reset: a client
+      * still writing its body then fails the exchange before it reads the
+      * answer. Only the bytes are read; nothing is buffered. */
+    private def discardUnread(ex: HttpExchange): Unit = {
+      val in = ex.getRequestBody
+      val buf = new Array[Byte](64 * 1024)
+      var left = DiscardMaxBytes
+      var n = in.read(buf)
+      while (n >= 0 && left > 0) {
+        left -= n
+        n = in.read(buf)
+      }
+    }
+
     private def detail(ex: HttpExchange, status: Int, msg: String): Unit =
-      respond(ex, status, s"""{"detail":${jStr(msg)}}""")
+      respond(ex, status, s"""{"detail":${JsonString.quote(msg)}}""")
 
     private def queryParams(ex: HttpExchange): Map[String, String] =
       Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&").toSeq
@@ -283,7 +327,7 @@ object HttpApi {
       * ~200 bytes, so the slack covers any batch whose average part is a
       * kilobyte or more; beyond that the cap's memory bound deliberately
       * wins over 413-text fidelity). A Content-Length above the cap is
-      * refused before reading a byte; otherwise the buffer is pre-sized
+      * refused before buffering a byte; otherwise the buffer is pre-sized
       * to the declared length. Returns None when the body overruns the
       * cap; an over-cap body is over the payload budget by construction,
       * so no such valid request is ever truncated. */

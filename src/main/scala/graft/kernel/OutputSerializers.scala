@@ -45,17 +45,9 @@ object OutputSerializers {
     * the shape a downstream Spark reader ingests with a declared schema
     * (from_json + ArrayType(StructType(...))). */
   object Json extends OutputSerializer {
-    val format = "json"
+    import graft.JsonString.{quote => q}
 
-    private def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val format = "json"
 
     def serialize(doc: DocTree): String = {
       val items = doc.items.map {

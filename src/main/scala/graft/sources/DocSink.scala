@@ -14,6 +14,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
+import graft.JsonString
+
 /** The WRITE half of the connector tier — a native DataSource V2 sink
   * that materializes `(filename STRING, content STRING)` rows as one
   * file per row under the target directory:
@@ -192,9 +194,6 @@ final class DocSinkWriter(dir: String, jobId: String,
     scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
   private def bundleName = s"bundle-$partitionId-$taskId-$bundleSeq.bin"
 
-  private def jsonStr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   /** Seal the open shard: close the payload stream, write the sidecar
     * index (one JSON line per document: bundle, name, offset, len), and
     * queue both for this attempt's publish. */
@@ -203,7 +202,7 @@ final class DocSinkWriter(dir: String, jobId: String,
       bundleOut.close()
       val idx = fs.create(new Path(staging, bundleName + ".idx"), true)
       try bundleIndex.foreach { case (name, off, len) =>
-        idx.write((s"""{"bundle":${jsonStr(bundleName)},"name":${jsonStr(name)}""" +
+        idx.write((s"""{"bundle":${JsonString.quote(bundleName)},"name":${JsonString.quote(name)}""" +
           s""","offset":$off,"len":$len}""" + "\n").getBytes("UTF-8"))
       } finally idx.close()
       written += bundleName

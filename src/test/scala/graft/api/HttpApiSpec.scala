@@ -145,6 +145,26 @@ class HttpApiSpec extends SparkTestBase {
     } finally small.stop()
   }
 
+  test("refused uploads are answered every time, with no retry") {
+    // 3 MB bodies against 1 MB caps (413), and a 422 decided before the
+    // body is read: unless the server takes the unread bytes off the
+    // socket before answering, its close resets the connection while the
+    // client is still sending, and the client can lose the answer
+    val small = new HttpApi.Server(spark, 0, ledgerDir, maxFileMb = 1, maxBatchMb = 1).start()
+    try {
+      val body = multipart(("documents", "huge.md", new Array[Byte](3 * 1024 * 1024)))
+      (1 to 30).foreach { i =>
+        val (query, status) = if (i % 2 == 0) ("?image_resolution_scale=9", 422) else ("", 413)
+        val r = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${small.boundPort}/documents/batch-convert$query"))
+          .header("Content-Type", s"multipart/form-data; boundary=$Boundary")
+          .POST(HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == status, r.body())
+      }
+    } finally small.stop()
+  }
+
   test("sync single escalates conversion errors to 500; batch keeps error rows") {
     // passes the zip sniff as docx, fails structural parsing
     val broken = "PKword/document.xml but not a real zip"
@@ -225,6 +245,34 @@ class HttpApiSpec extends SparkTestBase {
     val ready = get("/health/ready")
     assert(ready.statusCode() == 200)
     assert(ready.body().contains(""""broker":"ok""""), ready.body())
+  }
+
+  test("transport floor: keep-alive round-trips do not wait on a delayed ACK") {
+    // the JDK server flushes headers and body separately; with Nagle on,
+    // the body waits ~40 ms for the client's delayed ACK of the headers,
+    // so a median at that level means TCP_NODELAY did not take effect
+    // (something initialised the JDK server configuration first)
+    val keepAlive = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val md = multipart(("document", "small.md", "# Small\n\nBody text.".getBytes(StandardCharsets.UTF_8)))
+    val health = HttpRequest.newBuilder(URI.create(base + "/health")).GET().build()
+    val convert = HttpRequest.newBuilder(URI.create(base + "/documents/convert"))
+      .header("Content-Type", s"multipart/form-data; boundary=$Boundary")
+      .POST(HttpRequest.BodyPublishers.ofByteArray(md)).build()
+    def medianMs(req: HttpRequest): Double = {
+      (1 to 3).foreach(_ => keepAlive.send(req, HttpResponse.BodyHandlers.ofString()))
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        val r = keepAlive.send(req, HttpResponse.BodyHandlers.ofString())
+        val dt = (System.nanoTime() - t0) / 1e6
+        assert(r.statusCode() == 200, r.body())
+        dt
+      }.sorted
+      (ms(9) + ms(10)) / 2
+    }
+    val healthMs = medianMs(health)
+    val convertMs = medianMs(convert)
+    assert(healthMs < 15.0, f"GET /health median $healthMs%.1f ms")
+    assert(convertMs < 15.0, f"POST /documents/convert median $convertMs%.1f ms")
   }
 
   test("CORS: wildcard default, configured origins echo + credentials") {

@@ -115,6 +115,30 @@ class DocSinkSpec extends SparkTestBase {
     }
   }
 
+  test("bundled index reads back names with tabs and newlines through spark.read.json") {
+    // the sidecar index is one JSON object per line; a raw tab or newline
+    // in a name would turn its line into a corrupt record for the reader
+    val dir = tmp()
+    val docs = Seq(("tab\there.md", "first body"), ("line\nbreak.md", "second, longer body"),
+      ("cr\r\nboth\t.md", "third"), ("plain.md", "fourth body"))
+    docs.toDF("filename", "content").coalesce(1)
+      .write.format("doclingsink").option("bundleDocs", 8)
+      .mode("append").save(dir)
+    val idx = spark.read
+      .schema("bundle STRING, name STRING, offset LONG, len LONG")
+      .json(dir + "/*.idx").collect()
+    assert(idx.length == docs.size, idx.mkString("\n"))
+    val byName = idx.map(r => r.getString(1) -> r).toMap
+    assert(byName.keySet == docs.map(_._1).toSet, idx.mkString("\n"))
+    docs.foreach { case (name, body) =>
+      val r = byName(name)
+      val bytes = Files.readAllBytes(Paths.get(dir, r.getString(0)))
+        .slice(r.getLong(2).toInt, (r.getLong(2) + r.getLong(3)).toInt)
+      assert(r.getLong(3) == body.getBytes("UTF-8").length, s"len of $name")
+      assert(new String(bytes, "UTF-8") == body, s"$name reconstructed wrong")
+    }
+  }
+
   test("a losing speculative attempt's abort cannot unstage its twin's files") {
     // two live attempts of the same partition (speculation): each stages
     // under its own attempt subdir, so the loser's abort() removes only
